@@ -4,12 +4,19 @@ The scale path of the query engine (SURVEY §2.5 Q4-Q7, north_rule):
 
   1. The term filter prunes the packed-postings scan to the query terms
      (Parquet row-group min/max on the term column; Iceberg bucket
-     pruning in production).
+     pruning in production). The ``term IN (…)`` predicate is one SQL
+     expression (segments.term_in), so its driver cost does not grow
+     with the term count.
   2. Each *shard* (doc-hash partition) answers the conjunction locally —
      all terms' shard-s postings cover the same doc subset, so shards
      are embarrassingly parallel (the reference's per-segment
-     scatter/gather, Query/QueryProcessor.hs:61-152).
-  3. Inside a shard (vectorized numpy in applyInPandas):
+     scatter/gather, Query/QueryProcessor.hs:61-152). The scatter
+     (_scatter) places shard s in partition s mod n_shards with
+     repartitionById — one task per shard, through an exchange AQE
+     never coalesces — and runs the kernel per partition in mapInArrow.
+  3. Inside a shard (vectorized numpy over Arrow column slices; a term's
+     packed rows are grouped with plain dict lookups, never per-term
+     pandas frames, and each kernel call builds one output frame):
        a. intersect rarest-term-first (query.rs:97-98) decoding doc-id
           blocks ONLY — tf/dl stay packed through the whole intersection
           (searchsorted against block_last skip pointers picks which id
@@ -25,9 +32,11 @@ The scale path of the query engine (SURVEY §2.5 Q4-Q7, north_rule):
      (TakeOrderedAndProject: per-partition heaps + driver merge — the
      bounded-heap merge of Q7/Q12).
 
-Deletions are filtered inside the shard kernel from a broadcast set
-(the docDeletions bitset analogue); corpus stats (N, avgdl, df) keep
-counting deleted docs, matching ranking.rs:48-50.
+Deletions are filtered inside the shard kernel from a small
+driver-collected set (the docDeletions bitset analogue) or, above
+DELETES_BROADCAST_MAX, from delete rows that ride the shard exchange;
+corpus stats (N, avgdl, df) keep counting deleted docs, matching
+ranking.rs:48-50.
 """
 
 from __future__ import annotations
@@ -36,6 +45,8 @@ from collections import Counter
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -47,7 +58,12 @@ from search_suite_spark.operators.codec import (
     unpack_blocks,
     unpack_ids,
 )
-from search_suite_spark.sources.segments import Segment
+from search_suite_spark.sources.segments import (
+    Segment,
+    shard_of_doc_id,
+    term_in,
+    term_probe_predicate,
+)
 
 RESULT_SCHEMA = "doc_id long, score double, term_count int"
 
@@ -70,10 +86,37 @@ def _idf(n_docs: int, df: float) -> float:
     return float(np.log((n_docs - df + 0.5) / (df + 0.5)))
 
 
-def _empty_result() -> pd.DataFrame:
-    return pd.DataFrame({"doc_id": [], "score": [], "term_count": []}).astype(
-        {"doc_id": "int64", "score": "float64", "term_count": "int32"}
-    )
+# kernel output columns: Spark DDL type → (numpy dtype, Arrow type)
+_COL_TYPES = {
+    "string": (object, pa.string()),
+    "long": (np.int64, pa.int64()),
+    "double": (np.float64, pa.float64()),
+    "int": (np.int32, pa.int32()),
+}
+
+
+def _fields(schema: str) -> list[tuple[str, str]]:
+    return [tuple(f.split(" ")) for f in schema.split(", ")]
+
+
+def _result_frame(schema: str, *cols) -> pd.DataFrame:
+    """A kernel's whole output, built once, in ``schema``'s column order
+    and dtypes; no columns = the typed empty frame."""
+    fields = _fields(schema)
+    if not cols:
+        cols = [()] * len(fields)
+    return pd.DataFrame({
+        n: np.asarray(c, dtype=_COL_TYPES[t][0])
+        for (n, t), c in zip(fields, cols)
+    })
+
+
+# the packed-row fields a _TermList reads (PACKED_SCHEMA minus term/shard)
+_ROW_FIELDS = (
+    "n", "ids", "tfs", "dls", "ids_offs", "tfs_offs", "dls_offs",
+    "block_last", "block_max_tf", "block_min_dl", "block_min_tf",
+    "block_max_dl",
+)
 
 
 class _TermList:
@@ -81,35 +124,33 @@ class _TermList:
     packed ROWS after the giant-list split (codec.MAX_ROW_POSTINGS):
     rows cover disjoint, consecutive doc-id ranges; this class presents
     them as one list addressed by GLOBAL block index. Only the metadata
-    arrays are concatenated up front (cheap); posting buffers decode
-    lazily per block, per owning row."""
+    arrays are concatenated up front (cheap, and a no-op for the usual
+    single row); posting buffers decode lazily per block, per owning
+    row."""
 
     def __init__(self, rows: list):
-        def first_last(r):
-            return np.asarray(r["block_last"], dtype=np.int64).view(np.uint64)[0]
-
-        rows = sorted(rows, key=first_last)
+        if len(rows) > 1:
+            rows = sorted(
+                rows,
+                key=lambda r: np.asarray(r["block_last"], dtype=np.int64)
+                .view(np.uint64)[0],
+            )
         self.rows = rows
         self.n = sum(int(r["n"]) for r in rows)
-        per_row = [
-            np.asarray(r["block_last"], dtype=np.int64).view(np.uint64)
-            for r in rows
-        ]
-        self.block_last = np.concatenate(per_row)
+        self._meta: dict[str, np.ndarray] = {}
+        self.block_last = self.meta("block_last").view(np.uint64)
         # global block b belongs to row searchsorted(row_block_off, b, 'right')-1
         self.row_block_off = np.concatenate(
-            ([0], np.cumsum([x.size for x in per_row]))
+            ([0], np.cumsum([len(r["block_last"]) for r in rows]))
         ).astype(np.int64)
-        self._meta: dict[str, np.ndarray] = {}
 
     def meta(self, name: str) -> np.ndarray:
         # memoized: phase 3 reads two metadata arrays per term per kernel
         # call, and split rows multiply the concat cost at scale
         m = self._meta.get(name)
         if m is None:
-            m = np.concatenate(
-                [np.asarray(r[name], dtype=np.int64) for r in self.rows]
-            )
+            parts = [np.asarray(r[name], dtype=np.int64) for r in self.rows]
+            m = parts[0] if len(parts) == 1 else np.concatenate(parts)
             self._meta[name] = m
         return m
 
@@ -198,11 +239,10 @@ def _single_term_topk(
     cache: "_BlockCache",
     idf: float,
     mult: int,
-    n_instances: int,
     avgdl: int,
     k: int,
     deleted_ids: np.ndarray,
-) -> pd.DataFrame:
+) -> tuple[np.ndarray, np.ndarray] | None:
     """Single-term top-k WITHOUT the full id decode: blocks are visited
     in upper-bound order and decoding stops once the k-th best exact
     score (θ) provably beats every remaining block's bound.
@@ -217,6 +257,7 @@ def _single_term_topk(
     rank-identical with the flat oracle; the decode stats then show
     transfer ∝ blocks that could matter, matching the reference's
     skip-reads (index_reader.rs:271-311) for the single-term case too.
+    Returns (uint64 doc_ids, scores), or None when nothing matches.
     """
     if idf >= 0:
         ub = mult * idf * impact_bound(
@@ -263,19 +304,13 @@ def _single_term_topk(
                 all_scores.size - k
             ]
     if not kept_ids:
-        return _empty_result()
+        return None
     out_ids = np.concatenate(kept_ids)
     out_scores = np.concatenate(kept_scores)
     if out_ids.size > k:
         keep = out_scores >= theta
         out_ids, out_scores = out_ids[keep], out_scores[keep]
-    return pd.DataFrame(
-        {
-            "doc_id": out_ids.view(np.int64),
-            "score": out_scores,
-            "term_count": np.full(out_ids.size, n_instances, dtype=np.int32),
-        }
-    )
+    return out_ids, out_scores
 
 
 def _block_upper_bounds(
@@ -356,12 +391,11 @@ def _score_conjunctive(lists, caches, terms_meta, idfs, avgdl, k, deleted_ids):
     kernel scores many queries against one shard decode; caches are
     shared so a block decoded for one query is reused by the next).
     terms_meta: {term: (global_df, multiplicity)} for THIS query.
-    Returns the kernel-local result frame (doc_id, score, term_count).
+    Returns (uint64 doc_ids, scores), or None when nothing matches.
     """
-    n_instances = sum(m for _, m in terms_meta.values())
     if any(t not in lists for t in terms_meta):
         # some query term has no postings in this shard → empty AND
-        return _empty_result()
+        return None
     # rarest-first by shard-local posting count
     order = sorted(terms_meta, key=lambda t: lists[t].n)
 
@@ -369,15 +403,14 @@ def _score_conjunctive(lists, caches, terms_meta, idfs, avgdl, k, deleted_ids):
         t = order[0]
         return _single_term_topk(
             lists[t], caches.setdefault(t, _BlockCache(lists[t])),
-            idfs[t], terms_meta[t][1],
-            n_instances, avgdl, k, deleted_ids,
+            idfs[t], terms_meta[t][1], avgdl, k, deleted_ids,
         )
 
     # ---- phase 1+2: ids-only intersection ------------------------
     cand_ids = lists[order[0]].decode_all_ids()
     for t in order[1:]:
         if cand_ids.size == 0:
-            return _empty_result()
+            return None
         tl = lists[t]
         blocks = np.searchsorted(tl.block_last, cand_ids, side="left")
         in_range = blocks < tl.block_last.size
@@ -397,7 +430,7 @@ def _score_conjunctive(lists, caches, terms_meta, idfs, avgdl, k, deleted_ids):
         cand_ids = cand_ids[~is_dead]
 
     if cand_ids.size == 0:
-        return _empty_result()
+        return None
 
     # ---- phase 3: block-max upper bounds, then exact scoring in
     # upper-bound order with lossless θ pruning (shared with the
@@ -417,15 +450,7 @@ def _score_conjunctive(lists, caches, terms_meta, idfs, avgdl, k, deleted_ids):
         return score
 
     sel_kept, out_scores = _theta_pruned_topk(ub, k, score_chunk)
-    out_ids = cand_ids[sel_kept]
-
-    return pd.DataFrame(
-        {
-            "doc_id": out_ids.view(np.int64),
-            "score": out_scores,
-            "term_count": np.full(out_ids.size, n_instances, dtype=np.int32),
-        }
-    )
+    return cand_ids[sel_kept], out_scores
 
 
 PARTIAL_RESULT_SCHEMA = "doc_id long, score double, n_matched int"
@@ -444,10 +469,11 @@ def _score_partial(
     pruned: per-candidate upper bounds sum only the terms that HIT the
     candidate, exact scoring runs in upper-bound order and stops at θ
     like the conjunctive kernel, so tf/dl blocks of hopeless candidates
-    never decode."""
+    never decode. Returns (uint64 doc_ids, scores, n_matched), or None
+    when nothing qualifies."""
     present = [t for t in terms_meta if t in lists]
     if not present:
-        return _empty_result().rename(columns={"term_count": "n_matched"})
+        return None
     ids_per_term = {t: lists[t].decode_all_ids() for t in present}
     cand = np.unique(np.concatenate([ids_per_term[t] for t in present]))
     hits: dict[str, np.ndarray] = {}
@@ -468,7 +494,7 @@ def _score_partial(
         is_dead[dead_ok] = deleted_ids[dead[dead_ok]] == cand[dead_ok]
         keep &= ~is_dead
     if not keep.any():
-        return _empty_result().rename(columns={"term_count": "n_matched"})
+        return None
     cand, n_matched = cand[keep], n_matched[keep]
     for t in present:
         hits[t] = hits[t][keep]
@@ -489,25 +515,35 @@ def _score_partial(
         return score
 
     sel_kept, out_scores = _theta_pruned_topk(ub, k, score_chunk)
-    out_ids, out_nm = cand[sel_kept], n_matched[sel_kept]
-    return pd.DataFrame(
-        {
-            "doc_id": out_ids.view(np.int64),
-            "score": out_scores,
-            "n_matched": out_nm.astype(np.int32),
-        }
-    )
+    return cand[sel_kept], out_scores, n_matched[sel_kept]
 
 
-def _build_lists(pdf: pd.DataFrame) -> dict:
-    """Group a shard's posting rows into _TermLists (vectorized row
-    grouping: to_dict('records') hands each row to _TermList as a plain
-    dict — iterrows built a pandas Series per row, measurably slower
-    once split rows multiply the row count)."""
-    return {
-        t: _TermList(g.to_dict("records"))
-        for t, g in pdf.groupby("term", sort=False)
-    }
+def _build_lists(rows) -> dict[str, _TermList]:
+    """Group a shard's posting rows into _TermLists. ``rows`` maps each
+    column name to one value per row — the dict of column lists the
+    partition runner builds (_column_lists), or a pandas frame. Every
+    row becomes one plain dict and finds its term's list with one dict
+    lookup: no per-term frames, no per-row Series."""
+    by_term: dict[str, list[dict]] = {}
+    for t, *vals in zip(rows["term"], *(rows[c] for c in _ROW_FIELDS)):
+        by_term.setdefault(t, []).append(dict(zip(_ROW_FIELDS, vals)))
+    return {t: _TermList(rs) for t, rs in by_term.items()}
+
+
+def _column_lists(table: pa.Table) -> dict[str, list]:
+    """An Arrow partition as {column: one value per row}. List columns
+    (the block metadata) become numpy views into the column's single
+    value buffer; every other column becomes Python scalars/bytes."""
+    out = {}
+    for name, col in zip(table.column_names, table.columns):
+        a = col.combine_chunks()
+        if pa.types.is_list(a.type):
+            flat = a.values.to_numpy(zero_copy_only=False)
+            offs = a.offsets.to_numpy()
+            out[name] = [flat[s:e] for s, e in zip(offs[:-1], offs[1:])]
+        else:
+            out[name] = a.to_numpy(zero_copy_only=False).tolist()
+    return out
 
 
 def _shard_kernel(terms_meta, n_docs, avgdl, k):
@@ -516,14 +552,12 @@ def _shard_kernel(terms_meta, n_docs, avgdl, k):
     terms_meta: {term: (global_df, multiplicity)}. global_df may be None
     for EVERY term, meaning the caller joined the dictionary's df onto
     the posting rows JVM-side (wand_scored's single-job path) — the
-    kernel then reads each term's global df from the pdf's ``df`` column
+    kernel then reads each term's global df from the rows' ``df`` column
     and derives idf locally, so no dictionary values ever round-trip
-    through the driver. The returned kernel
-    takes (pdf, deleted_ids) — deleted_ids a sorted uint64 numpy array of
-    this shard's deleted doc ids; the caller either closes over one small
-    driver-collected array (low delete volume) or cogroups the deletes
-    table by shard so each kernel invocation gets only its shard's slice
-    (high volume — nothing ever materializes on the driver).
+    through the driver. The returned kernel takes (rows, deleted_ids) —
+    rows as _build_lists takes them, deleted_ids a sorted uint64 numpy
+    array of this shard's deleted doc ids (see _scatter) — and returns a
+    RESULT_SCHEMA frame.
     """
     df_in_rows = any(df is None for df, _ in terms_meta.values())
     idfs = (
@@ -531,27 +565,34 @@ def _shard_kernel(terms_meta, n_docs, avgdl, k):
         if df_in_rows
         else {t: _idf(n_docs, df) for t, (df, _) in terms_meta.items()}
     )
+    n_instances = sum(m for _, m in terms_meta.values())
 
-    def kernel(pdf: pd.DataFrame, deleted_ids: np.ndarray) -> pd.DataFrame:
-        present = set(pdf["term"])
-        if present != set(terms_meta):
+    def kernel(rows, deleted_ids: np.ndarray) -> pd.DataFrame:
+        if set(rows["term"]) != set(terms_meta):
             # some query term has no postings in this shard → empty AND
             # (covers the global missing-term fast abort too on the
             # single-job path: a term absent from the dictionary joins
             # away everywhere)
-            return _empty_result()
-        lists = _build_lists(pdf)
+            return _result_frame(RESULT_SCHEMA)
+        lists = _build_lists(rows)
         if df_in_rows:
             # global df rides every posting row (dictionary broadcast
             # join); constant per term — idempotent to recompute across
             # shards of the same worker
-            for t, g in pdf.groupby("term", sort=False):
-                idfs[t] = _idf(n_docs, int(g["df"].iat[0]))
+            for t, df in zip(rows["term"], rows["df"]):
+                idfs[t] = _idf(n_docs, int(df))
         _stats_dict()["blocks_total"] += sum(
             tl.block_last.size for tl in lists.values()
         )
-        return _score_conjunctive(
+        hit = _score_conjunctive(
             lists, {}, terms_meta, idfs, avgdl, k, deleted_ids
+        )
+        if hit is None:
+            return _result_frame(RESULT_SCHEMA)
+        ids, scores = hit
+        return _result_frame(
+            RESULT_SCHEMA, ids.view(np.int64), scores,
+            np.full(ids.size, n_instances),
         )
 
     return kernel
@@ -568,38 +609,47 @@ def _batch_shard_kernel(meta_bc, n_docs, avgdl, k):
     sized. The shard's posting rows (the union of every query's terms)
     are grouped into _TermLists ONCE and the block caches are SHARED —
     a block decoded for one query is free for every other query
-    touching it. Output rows carry the qid; per-query top-k and url
-    resolution happen at the Spark layer.
+    touching it. A query with no match in the shard costs one dict
+    probe; the hits of all queries land in ONE output frame whose rows
+    carry the qid. Per-query top-k and url resolution happen at the
+    Spark layer.
     """
 
-    def kernel(pdf: pd.DataFrame, deleted_ids: np.ndarray) -> pd.DataFrame:
+    def kernel(rows, deleted_ids: np.ndarray) -> pd.DataFrame:
         queries_meta, idfs = meta_bc.value
-        lists = _build_lists(pdf)
+        lists = _build_lists(rows)
         _stats_dict()["blocks_total"] += sum(
             tl.block_last.size for tl in lists.values()
         )
         caches: dict = {}
-        outs = []
+        qids, ids, scores, counts = [], [], [], []
         for qid, qm in queries_meta.items():
-            out = _score_conjunctive(
+            hit = _score_conjunctive(
                 lists, caches, qm, idfs, avgdl, k, deleted_ids
             )
-            if len(out):
-                out.insert(0, "qid", qid)
-                outs.append(out)
-        if not outs:
-            e = _empty_result()
-            e.insert(0, "qid", pd.Series([], dtype=object))
-            return e
-        return pd.concat(outs, ignore_index=True)
+            if hit is not None:
+                qids.append(qid)
+                ids.append(hit[0])
+                scores.append(hit[1])
+                counts.append(sum(m for _, m in qm.values()))
+        if not ids:
+            return _result_frame(BATCH_RESULT_SCHEMA)
+        sizes = [a.size for a in ids]
+        return _result_frame(
+            BATCH_RESULT_SCHEMA,
+            np.repeat(np.array(qids, dtype=object), sizes),
+            np.concatenate(ids).view(np.int64),
+            np.concatenate(scores),
+            np.repeat(counts, sizes),
+        )
 
     return kernel
 
 
 # above this many delete rows the deletes table is never collected to the
-# driver: it is shard-partitioned and cogrouped into the shard kernels
-# instead (compaction garbage-collects deletes, so most segments sit far
-# below this; the cap is a driver-OOM guard for delete-heavy workloads)
+# driver: its rows ride the shard exchange into the kernels instead
+# (compaction garbage-collects deletes, so most segments sit far below
+# this; the cap is a driver-OOM guard for delete-heavy workloads)
 DELETES_BROADCAST_MAX = 1 << 16
 
 
@@ -625,6 +675,105 @@ def _route_deletes(seg: Segment, deletes_broadcast_max: int):
         else:
             deletes_df = d
     return deleted, deletes_df
+
+
+def _scatter(
+    seg: Segment,
+    rows: DataFrame,
+    kernel,
+    schema: str,
+    deletes_broadcast_max: int,
+    stats: dict | None = None,
+) -> DataFrame:
+    """Run ``kernel(rows, deleted_ids)`` once per shard of ``rows`` (the
+    segment's posting rows, pruned to the query terms) → the kernels'
+    concatenated ``schema`` frames. The one scatter behind wand_scored,
+    wand_partial and bm25_batch.
+
+    Placement: repartitionById puts shard s in partition s mod
+    n_shards, so every shard gets its own task. The exchange is a
+    REPARTITION_BY_NUM one, which AQE does not coalesce — a hash
+    groupBy("shard") of a small, term-pruned scan is coalesced into ONE
+    task that runs the shards back to back. Rows are still grouped by
+    shard inside each partition, so a segment that under-reports
+    n_shards only shares tasks between shards, never posting lists.
+
+    Deletes (_route_deletes): a small set is collected once and closed
+    over; a large one never reaches the driver — its (shard, doc_id)
+    rows join the same exchange as term-less rows, so each partition
+    receives exactly its shards' deletes. That routing trusts
+    pmod(doc_id, n_shards) to be the postings' shard, so it needs a
+    lineage-derived n_shards and fails loudly on a partition holding a
+    shard ≥ n_shards (an under-reporting segment).
+
+    ``stats``: the caller's blocks_decoded / blocks_total accumulators
+    (see wand_scored), fed with each kernel call's DECODE_STATS delta.
+    """
+    deleted, deletes_df = _route_deletes(seg, deletes_broadcast_max)
+    n_shards = seg.n_shards
+    n_parts = n_shards
+    if deletes_df is not None:
+        if n_shards <= 0:
+            # pmod(doc_id, 0) yields nulls → deletes silently mis-shard
+            # and deleted docs come back. n_shards is lineage-derived
+            # (read_segment); a hand-built Segment must set it.
+            raise ValueError(
+                "exchange-routed deletes need Segment.n_shards > 0 "
+                f"(got {n_shards}); read the segment via read_segment "
+                "or raise deletes_broadcast_max"
+            )
+        rows = rows.unionByName(
+            deletes_df.select(
+                shard_of_doc_id(n_shards).alias("shard"),
+                F.col("doc_id").alias("_del"),
+            ),
+            allowMissingColumns=True,
+        )
+    elif n_parts <= 0:
+        # hand-built Segment without a lineage-derived shard count: any
+        # partition count is correct, rows are grouped by shard below
+        n_parts = rows.sparkSession.sparkContext.defaultParallelism
+    check_shards = deletes_df is not None  # (the frame never pickles)
+    accs = None if stats is None else (
+        stats["blocks_decoded"], stats["blocks_total"]
+    )
+    arrow_schema = pa.schema(
+        [(n, _COL_TYPES[t][1]) for n, t in _fields(schema)]
+    )
+
+    def run(batches):
+        batches = list(batches)
+        if not batches:
+            return
+        t = pa.Table.from_batches(batches)
+        dead = deleted
+        if "_del" in t.column_names:
+            is_del = pc.is_null(t.column("term"))
+            dead = np.sort(
+                pc.drop_null(t.column("_del")).to_numpy().view(np.uint64)
+            )
+            t = t.filter(pc.invert(is_del)).drop_columns(["_del"])
+        shard = t.column("shard").to_numpy()
+        if check_shards and (shard >= n_shards).any():
+            raise ValueError(
+                f"posting rows of shard {int(shard.max())} in a segment "
+                f"reporting n_shards={n_shards}: deletes would mis-route"
+            )
+        sd = _stats_dict()
+        shards = np.unique(shard)
+        for s in shards:
+            part = t if shards.size == 1 else t.filter(pa.array(shard == s))
+            d0, t0 = sd["blocks_decoded"], sd["blocks_total"]
+            out = kernel(_column_lists(part), dead)
+            if accs is not None:
+                accs[0].add(sd["blocks_decoded"] - d0)
+                accs[1].add(sd["blocks_total"] - t0)
+            if len(out):
+                yield pa.RecordBatch.from_pandas(
+                    out, schema=arrow_schema, preserve_index=False
+                )
+
+    return rows.repartitionById(n_parts, "shard").mapInArrow(run, schema)
 
 
 def wand_scored(
@@ -660,12 +809,17 @@ def wand_scored(
         stats["blocks_decoded"] = spark.sparkContext.accumulator(0)
         stats["blocks_total"] = spark.sparkContext.accumulator(0)
     q_terms = normalise(query)
-    empty = spark.createDataFrame([], "url string, score double, term_count int")
+
+    def empty() -> DataFrame:  # built only on the early-return paths
+        return spark.createDataFrame(
+            [], "url string, score double, term_count int"
+        )
+
     if not q_terms:
-        return empty
+        return empty()
 
     multiplicity = Counter(q_terms)
-    rows = seg.postings.filter(F.col("term").isin(list(multiplicity)))
+    rows = seg.postings.filter(term_in(multiplicity))
 
     # global df per term (Q1 term lookup) — three strategies:
     #   1. caller-provided (a collection batches every segment's lookups
@@ -688,11 +842,9 @@ def wand_scored(
     if term_dfs is not None:
         dfs = {t: term_dfs[t] for t in multiplicity if t in term_dfs}
         if len(dfs) < len(multiplicity):
-            return empty
+            return empty()
         terms_meta = {t: (dfs[t], m) for t, m in multiplicity.items()}
     elif dict_strategy == "join" and seg.terms is not None:
-        from search_suite_spark.sources.segments import term_probe_predicate
-
         q_dict = seg.terms.filter(
             term_probe_predicate(seg.terms, list(multiplicity))
         ).select("term", F.col("df").cast("long").alias("df"))
@@ -701,59 +853,13 @@ def wand_scored(
     else:
         dfs = seg.term_dfs(list(multiplicity))
         if len(dfs) < len(multiplicity):
-            return empty
+            return empty()
         terms_meta = {t: (dfs[t], m) for t, m in multiplicity.items()}
 
-    deleted, deletes_df = _route_deletes(seg, deletes_broadcast_max)
-
     kernel = _shard_kernel(terms_meta, seg.num_docs, seg.avgdl, max_results)
-    if stats is not None:
-        acc_dec = stats["blocks_decoded"]
-        acc_tot = stats["blocks_total"]
-        inner = kernel
-
-        def kernel(pdf, deleted_ids, _inner=inner):
-            sd = _stats_dict()
-            d0, t0 = sd["blocks_decoded"], sd["blocks_total"]
-            out = _inner(pdf, deleted_ids)
-            acc_dec.add(sd["blocks_decoded"] - d0)
-            acc_tot.add(sd["blocks_total"] - t0)
-            return out
-
-    if deletes_df is None:
-        cands = rows.groupBy("shard").applyInPandas(
-            lambda pdf: kernel(pdf, deleted), RESULT_SCHEMA
-        )
-    else:
-        # large-deletes path: shard = pmod(doc_id, n_shards) is derivable
-        # from the delete's doc_id alone, so the deletes co-shuffle with
-        # the postings rows and each kernel sees only its shard's slice
-        from search_suite_spark.sources.segments import shard_of_doc_id
-
-        if seg.n_shards <= 0:
-            # pmod(doc_id, 0) yields nulls → deletes silently mis-shard
-            # and deleted docs come back. n_shards is lineage-derived
-            # (read_segment); a hand-built Segment must set it.
-            raise ValueError(
-                "cogrouped deletes need Segment.n_shards > 0 "
-                f"(got {seg.n_shards}); read the segment via read_segment "
-                "or raise deletes_broadcast_max"
-            )
-        del_sharded = deletes_df.withColumn(
-            "shard", shard_of_doc_id(seg.n_shards)
-        )
-
-        def cg(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            dead = np.sort(
-                right["doc_id"].to_numpy(dtype=np.int64).view(np.uint64)
-            )
-            return kernel(left, dead)
-
-        cands = (
-            rows.groupBy("shard")
-            .cogroup(del_sharded.groupBy("shard"))
-            .applyInPandas(cg, RESULT_SCHEMA)
-        )
+    cands = _scatter(
+        seg, rows, kernel, RESULT_SCHEMA, deletes_broadcast_max, stats
+    )
 
     # resolve urls BEFORE the global limit: each shard kernel already
     # pruned to its local top-k (+ ties), so the join touches ≤ ~k·n_shards
@@ -793,16 +899,19 @@ def wand_partial(
     terms match; the score sums every matched instance. Terms absent
     from the dictionary simply don't match (no conjunctive fast abort —
     disjunctive semantics). Same shard scatter/gather + deletes routing
-    as wand_scored; candidate generation is the full union of present
-    terms' id lists (the disjunctive floor), exact scoring stays
+    as wand_scored (_scatter); candidate generation is the full union of
+    present terms' id lists (the disjunctive floor), exact scoring stays
     θ-pruned in upper-bound order."""
     spark = seg.postings.sparkSession
     q_terms = normalise(query)
-    empty = spark.createDataFrame(
-        [], "url string, score double, n_matched int"
-    )
+
+    def empty() -> DataFrame:  # built only on the early-return paths
+        return spark.createDataFrame(
+            [], "url string, score double, n_matched int"
+        )
+
     if not q_terms:
-        return empty
+        return empty()
     multiplicity = Counter(q_terms)
     dfs = (
         {t: term_dfs[t] for t in multiplicity if t in term_dfs}
@@ -813,49 +922,29 @@ def wand_partial(
         t: (dfs[t], m) for t, m in multiplicity.items() if t in dfs
     }
     if not terms_meta:
-        return empty
+        return empty()
     idfs = {t: _idf(seg.num_docs, df) for t, (df, _) in terms_meta.items()}
-    rows = seg.postings.filter(F.col("term").isin(list(terms_meta)))
-    deleted, deletes_df = _route_deletes(seg, deletes_broadcast_max)
+    rows = seg.postings.filter(term_in(terms_meta))
     avgdl, k, mm = seg.avgdl, max_results, min_should_match
 
-    def kernel(pdf: pd.DataFrame, deleted_ids: np.ndarray) -> pd.DataFrame:
-        lists = _build_lists(pdf)
+    def kernel(rows, deleted_ids: np.ndarray) -> pd.DataFrame:
+        lists = _build_lists(rows)
         _stats_dict()["blocks_total"] += sum(
             tl.block_last.size for tl in lists.values()
         )
-        return _score_partial(
+        hit = _score_partial(
             lists, {}, terms_meta, idfs, avgdl, k, mm, deleted_ids
         )
-
-    if deletes_df is None:
-        cands = rows.groupBy("shard").applyInPandas(
-            lambda pdf: kernel(pdf, deleted), PARTIAL_RESULT_SCHEMA
-        )
-    else:
-        from search_suite_spark.sources.segments import shard_of_doc_id
-
-        if seg.n_shards <= 0:
-            raise ValueError(
-                "cogrouped deletes need Segment.n_shards > 0 "
-                f"(got {seg.n_shards}); read the segment via read_segment "
-                "or raise deletes_broadcast_max"
-            )
-        del_sharded = deletes_df.withColumn(
-            "shard", shard_of_doc_id(seg.n_shards)
+        if hit is None:
+            return _result_frame(PARTIAL_RESULT_SCHEMA)
+        ids, scores, n_matched = hit
+        return _result_frame(
+            PARTIAL_RESULT_SCHEMA, ids.view(np.int64), scores, n_matched
         )
 
-        def cg(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            dead = np.sort(
-                right["doc_id"].to_numpy(dtype=np.int64).view(np.uint64)
-            )
-            return kernel(left, dead)
-
-        cands = (
-            rows.groupBy("shard")
-            .cogroup(del_sharded.groupBy("shard"))
-            .applyInPandas(cg, PARTIAL_RESULT_SCHEMA)
-        )
+    cands = _scatter(
+        seg, rows, kernel, PARTIAL_RESULT_SCHEMA, deletes_broadcast_max
+    )
 
     # candidate-side broadcast for the url resolve — see wand_scored
     if max_results is not None:
@@ -927,16 +1016,19 @@ def bm25_batch(
     if stats is not None:
         stats["blocks_decoded"] = spark.sparkContext.accumulator(0)
         stats["blocks_total"] = spark.sparkContext.accumulator(0)
-    empty = _attach_release(
-        spark.createDataFrame(
-            [], "qid string, url string, score double, term_count int"
-        ),
-        [],
-    )
+
+    def empty() -> DataFrame:  # built only on the early-return paths
+        return _attach_release(
+            spark.createDataFrame(
+                [], "qid string, url string, score double, term_count int"
+            ),
+            [],
+        )
+
     multis = {qid: Counter(normalise(q)) for qid, q in queries.items()}
     all_terms = sorted({t for m in multis.values() for t in m})
     if not all_terms:
-        return empty
+        return empty()
     # term_dfs: a collection caller batched every segment's dictionary
     # lookups into one job (registry.collection_term_dfs) — same seam as
     # wand_scored's
@@ -954,11 +1046,10 @@ def bm25_batch(
         if m and all(t in dfs for t in m)
     }
     if not queries_meta:
-        return empty
+        return empty()
     live_terms = sorted({t for qm in queries_meta.values() for t in qm})
-    rows = seg.postings.filter(F.col("term").isin(live_terms))
+    rows = seg.postings.filter(term_in(live_terms))
 
-    deleted, deletes_df = _route_deletes(seg, deletes_broadcast_max)
     # idf is a pure function of (n_docs, df): precompute once, ship with
     # the metadata in ONE broadcast (not the task closure — see
     # _batch_shard_kernel)
@@ -971,47 +1062,9 @@ def bm25_batch(
     kernel = _batch_shard_kernel(
         meta_bc, seg.num_docs, seg.avgdl, max_results
     )
-    if stats is not None:
-        acc_dec = stats["blocks_decoded"]
-        acc_tot = stats["blocks_total"]
-        inner = kernel
-
-        def kernel(pdf, deleted_ids, _inner=inner):
-            sd = _stats_dict()
-            d0, t0 = sd["blocks_decoded"], sd["blocks_total"]
-            out = _inner(pdf, deleted_ids)
-            acc_dec.add(sd["blocks_decoded"] - d0)
-            acc_tot.add(sd["blocks_total"] - t0)
-            return out
-
-    if deletes_df is None:
-        cands = rows.groupBy("shard").applyInPandas(
-            lambda pdf: kernel(pdf, deleted), BATCH_RESULT_SCHEMA
-        )
-    else:
-        from search_suite_spark.sources.segments import shard_of_doc_id
-
-        if seg.n_shards <= 0:
-            raise ValueError(
-                "cogrouped deletes need Segment.n_shards > 0 "
-                f"(got {seg.n_shards}); read the segment via read_segment "
-                "or raise deletes_broadcast_max"
-            )
-        del_sharded = deletes_df.withColumn(
-            "shard", shard_of_doc_id(seg.n_shards)
-        )
-
-        def cg(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            dead = np.sort(
-                right["doc_id"].to_numpy(dtype=np.int64).view(np.uint64)
-            )
-            return kernel(left, dead)
-
-        cands = (
-            rows.groupBy("shard")
-            .cogroup(del_sharded.groupBy("shard"))
-            .applyInPandas(cg, BATCH_RESULT_SCHEMA)
-        )
+    cands = _scatter(
+        seg, rows, kernel, BATCH_RESULT_SCHEMA, deletes_broadcast_max, stats
+    )
 
     # per-shard kernels already pruned each query to its local top-k
     # (+ θ-ties), so the docs join touches ≤ ~k·n_shards rows per query;

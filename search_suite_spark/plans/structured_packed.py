@@ -23,7 +23,7 @@ the set algebra:
      by (segment, shard). Shards partition docs (doc-hash), so leaf
      membership is decidable shard-locally: a text leaf's ids are the
      sorted-array intersection of its terms' decoded id lists
-     (ids-only decode — tf/dl stay packed, wand._TermList), a regex
+     (ids-only decode — tf/dl stay packed, wand._build_lists), a regex
      leaf's the union of its matched terms' lists. The kernel emits
      bare (leaf, doc_id) rows.
   3. The clause tree compiles to a BOOLEAN COLUMN over per-doc leaf
@@ -50,7 +50,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from search_suite_spark.operators.query import parse_query_terms
-from search_suite_spark.operators.wand import _TermList
+from search_suite_spark.operators.wand import _build_lists
 from search_suite_spark.plans.structured import (
     Clause,
     ClauseRegex,
@@ -58,7 +58,7 @@ from search_suite_spark.plans.structured import (
     Conjunction,
     parse_structured_query,
 )
-from search_suite_spark.sources.segments import Segment
+from search_suite_spark.sources.segments import Segment, term_in
 
 _LEAF_SCHEMA = "seg_i int, leaf int, doc_id long"
 
@@ -125,11 +125,11 @@ def _leaf_kernel(text_req: dict[int, list[str]]):
                 {"seg_i": [], "leaf": [], "doc_id": []}
             ).astype({"seg_i": "int32", "leaf": "int32", "doc_id": "int64"})
         seg_i = int(pdf["seg_i"].iat[0])
-        lists: dict[str, _TermList] = {}
+        lists = _build_lists(pdf)
+        # a term's leaves are the same on each of its (split) rows
         leaf_terms: dict[int, list[str]] = {}
-        for t, g in pdf.groupby("term", sort=False):
-            lists[t] = _TermList(g.to_dict("records"))
-            for lf in g["leaves"].iat[0]:
+        for t, lfs in dict(zip(pdf["term"], pdf["leaves"])).items():
+            for lf in lfs:
                 leaf_terms.setdefault(int(lf), []).append(t)
         ids_cache: dict[str, np.ndarray] = {}
 
@@ -230,7 +230,7 @@ def _segment_leaf_rows(
         # no regex → the full term set is driver-known: prune the scan
         # (Parquet row-group min/max on the sorted term column) and
         # broadcast the tiny map
-        rows = rows.filter(F.col("term").isin(text_terms))
+        rows = rows.filter(term_in(text_terms))
         tl = F.broadcast(tl)
     return rows.join(tl, "term").select(
         F.lit(seg_i).alias("seg_i"), "*"

@@ -29,7 +29,13 @@ from pyspark.sql import Window as W
 
 from search_suite_spark.plans.compaction import choose_merge_pair
 from search_suite_spark.operators.merge import merge_segments
-from search_suite_spark.sources.segments import Segment, build_segment, read_segment
+from search_suite_spark.sources.segments import (
+    Segment,
+    build_segment,
+    read_segment,
+    term_in,
+    term_probe_predicate,
+)
 
 _REPLACES = "replaces.json"  # compaction tombstone manifest (see below)
 
@@ -76,9 +82,18 @@ def load_collection(spark: SparkSession, col_dir: str) -> dict[str, Segment]:
 
 
 def _next_segment_name(col_dir: str) -> str:
+    """First seg_NNNNNN name free on disk AND in every live tombstone: a
+    merge deletes its sources, but their names stay in the merged
+    segment's replaces.json, so a new segment under such a name would be
+    hidden by load_collection and removed by compact_collection's
+    cleanup."""
     existing = set(os.listdir(col_dir)) if os.path.isdir(col_dir) else set()
+    taken = existing | _replaced_names(
+        col_dir,
+        [n for n in existing if _is_segment_dir(n, os.path.join(col_dir, n))],
+    )
     i = 0
-    while f"seg_{i:06d}" in existing or f"tmp_{i:06d}" in existing:
+    while f"seg_{i:06d}" in taken or f"tmp_{i:06d}" in taken:
         i += 1
     return f"seg_{i:06d}"
 
@@ -248,15 +263,13 @@ def collection_term_dfs(
     out: list[dict[str, int]] = [{} for _ in seg_list]
     if not terms or not seg_list:
         return out
-    from search_suite_spark.sources.segments import term_probe_predicate
-
     parts = []
     for i, s in enumerate(seg_list):
         src = (
             s.terms.filter(term_probe_predicate(s.terms, terms))
             .select("term", "df")
             if s.terms is not None
-            else s.postings.filter(F.col("term").isin(terms))
+            else s.postings.filter(term_in(terms))
             .groupBy("term")
             .agg(F.sum("n").alias("df"))
         )

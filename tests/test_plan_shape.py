@@ -156,3 +156,66 @@ def test_partial_and_collection_plans_stay_pruned(spark, tmp_path):
     # the kernel is the ONLY Python stage: one ArrowEvalPython-free scan
     # side (FlatMapGroupsInPandas is the applyInPandas kernel itself)
     assert "BatchEvalPython" not in plan, plan
+
+
+def test_term_in_matches_exactly(spark):
+    """term_in / term_probe_predicate quote their SQL literals: terms
+    holding quotes, backslashes or non-ASCII letters match themselves
+    and nothing else, and an empty list matches nothing."""
+    from search_suite_spark.sources.segments import (
+        term_in,
+        term_probe_predicate,
+    )
+
+    odd = ["it's", "back\\slash", "x\\'y", "''", "naïve", "日本語", "ß"]
+    decoys = ["its", "backslash", "x'y", "x\\y", "'", "naive", "ss", "a"]
+    terms = spark.createDataFrame(
+        [(w, len(w)) for w in odd + decoys], "term string, tlen int"
+    )
+    for words in (odd, odd[:1], ["nope", "naïve"], []):
+        got = sorted(r["term"] for r in terms.filter(term_in(words)).collect())
+        assert got == sorted(set(words) & set(odd + decoys)), words
+        got = sorted(
+            r["term"]
+            for r in terms.filter(
+                term_probe_predicate(terms, words)
+            ).collect()
+        )
+        assert got == sorted(set(words) & set(odd + decoys)), words
+
+
+def test_batch_plan_one_task_per_shard(spark, tmp_path):
+    """bm25_batch's posting scan pushes the term predicate into the
+    parquet reader, and the kernel reads ONE partition-id passthrough
+    exchange with n_shards partitions — an exchange AQE leaves
+    uncoalesced, so every shard runs in its own task."""
+    from search_suite_spark.operators.wand import bm25_batch
+    from search_suite_spark.sources.corpus import pages_from_docs_list
+    from search_suite_spark.sources.segments import build_segment
+
+    docs = [(f"http://p{i}", f"alpha beta gamma w{i}") for i in range(30)]
+    seg = build_segment(
+        pages_from_docs_list(spark, docs), str(tmp_path / "bseg"), n_shards=3
+    )
+    out = bm25_batch(seg, {"a": "alpha beta", "b": "gamma"}, max_results=5)
+    plan = _plan(out)
+    assert re.search(r"PushedFilters:.*[Ii]n\(term", plan), plan
+    passthrough = re.findall(
+        r"Arguments: shufflepartitionidpassthrough\(.*\), (\d+)\), "
+        r"REPARTITION_BY_NUM",
+        plan,
+    )
+    assert passthrough == [str(seg.n_shards)], plan
+    # that exchange is the kernel's direct input
+    m = re.search(r"MapInArrow \(\d+\)\n[ :|]*\+- Exchange \((\d+)\)", plan)
+    assert m, plan
+    assert re.search(
+        rf"\({m.group(1)}\) Exchange\n.*\nArguments: shufflepartitionid",
+        plan,
+    ), plan
+    assert {r["qid"] for r in out.collect()} == {"a", "b"}
+    # executed: no AQEShuffleRead (coalescing) between exchange and kernel
+    final = _plan(out)
+    assert re.search(
+        r"MapInArrow \(\d+\)\n[ :|]*\+- ShuffleQueryStage", final
+    ), final

@@ -204,3 +204,39 @@ def test_query_collection_batch_matches_individual(spark, tmp_path):
             for r in query_collection(segs, q, max_results=5).collect()
         ]
         assert by_qid.get(qid, []) == solo, qid
+
+
+def test_ingest_after_merge_never_reuses_tombstoned_name(spark, tmp_path):
+    """A merge deletes its sources but keeps their names in the merged
+    segment's replaces.json; the next ingest must not take such a name,
+    or load_collection hides the new segment and compact_collection's
+    cleanup deletes it. Three compacting batches, the first of which
+    merges into the base, keep every live url."""
+    col = str(tmp_path / "col_names")
+
+    def batch(tag, n):
+        return [(f"http://{tag}{i}", f"shared {tag} w{i}") for i in range(n)]
+
+    base = batch("base", 3)
+    index_into_collection(spark, pages_from_docs_list(spark, base), col,
+                          n_shards=2, compact=True)
+    assert list(load_collection(spark, col)) == ["seg_000000"]
+    want = {u for u, _ in base}
+    # 3 + 2 docs: both Fibonacci, sum 5 Fibonacci → the first batch
+    # merges with the base, and seg_000000 lives on in the tombstone
+    for tag, n in (("b1_", 2), ("b2_", 1), ("b3_", 4)):
+        docs = batch(tag, n)
+        want |= {u for u, _ in docs}
+        segs = index_into_collection(
+            spark, pages_from_docs_list(spark, docs), col,
+            n_shards=2, compact=True,
+        )
+        got = {
+            r["url"]
+            for s in segs.values()
+            for r in s.docs.select("url").collect()
+        }
+        assert got == want, tag
+        hits = query_collection(segs, "shared", max_results=None).collect()
+        assert {r["url"] for r in hits} == want, tag
+    assert "seg_000000" not in segs

@@ -13,7 +13,11 @@ Usage:
     python bench_extra.py wand        # url-resolve join: planner vs candidate broadcast
     python bench_extra.py merge_tail  # sequential vs concurrent write tail (x10 merge)
     python bench_extra.py merge_packed # packed-row vs flat-row segment merge (1x + x10)
-    python bench_extra.py build_tail  # phase profile of the 1x packed build
+
+Per-phase profiles of the build and merge come from the engine's own
+calls: ``python perfbench/run.py --workload ingest --seed 1 --seconds 10
+--trace 1`` attributes every Spark job to the public call that submitted
+it.
 """
 
 from __future__ import annotations
@@ -262,13 +266,6 @@ def exp_merge_packed():
     spark.stop()
 
 
-def exp_build_tail():
-    """Phase profile of the 1x packed build — see
-    tools/profile_r06_phases.py for the full sequential decomposition
-    this round's concurrency work was based on."""
-    os.system(f"{sys.executable} tools/profile_r06_phases.py 10")
-
-
 if __name__ == "__main__":
     which = sys.argv[1] if len(sys.argv) > 1 else "minhash"
     {
@@ -277,5 +274,4 @@ if __name__ == "__main__":
         "wand": exp_wand,
         "merge_tail": exp_merge_tail,
         "merge_packed": exp_merge_packed,
-        "build_tail": exp_build_tail,
     }[which]()

@@ -25,7 +25,6 @@ def main() -> None:
     ap.add_argument("--seg-dir", required=True)
     ap.add_argument("--n-shards", type=int, default=256)
     ap.add_argument("--shards-per-batch", type=int, default=32)
-    ap.add_argument("--n-tbuckets", type=int, default=64)
     ap.add_argument("--no-dedupe", action="store_true")
     ap.add_argument(
         "--bench-json",
@@ -74,7 +73,6 @@ def main() -> None:
             args.seg_dir,
             n_shards=args.n_shards,
             shards_per_batch=args.shards_per_batch,
-            n_tbuckets=args.n_tbuckets,
             resume=True,
             dedupe=not args.no_dedupe,
         )
@@ -91,7 +89,6 @@ def main() -> None:
             args.seg_dir,
             n_shards=args.n_shards,
             shards_per_batch=args.shards_per_batch,
-            n_tbuckets=args.n_tbuckets,
             resume=True,
             dedupe=not args.no_dedupe,
         )

@@ -175,7 +175,7 @@ def token_rows(pages: DataFrame) -> DataFrame:
     north_rule gate). tf is NOT pre-counted here: the pack kernel counts
     it after the one shuffle, which deletes an entire groupBy exchange
     from the build (token instances per (doc,term) land in the same
-    (shard, tbucket) group by construction).
+    shard slot by construction).
     """
     return pages.select(
         F.xxhash64("url").alias("doc_id"),

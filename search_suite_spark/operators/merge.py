@@ -27,10 +27,12 @@ Spark-first re-expression:
     recomputed at merge time, so merging segments with different shard
     counts re-shards for free.
 
-Scale: each side streams through one mapInPandas decode (no driver
-materialization); the only shuffle is the (shard, tbucket) repack —
-identical to the build path, so the merge cost is ~ a build over the
-union's postings without the tokenize pass.
+Scale: each side streams through one mapInArrow decode (no driver
+materialization); the only posting shuffle is the shard-slot exchange
+(segments.shard_slots) of the repack — identical to the build path, so
+the merge kernel runs one task per slot and its output is already in
+write layout, and the merge cost is ~ a build over the union's postings
+without the tokenize pass.
 """
 
 from __future__ import annotations
@@ -46,6 +48,7 @@ from search_suite_spark.sources.segments import (
     pack_and_write,
     read_segment,
     shard_of_doc_id,
+    shard_slots,
 )
 
 # cap on the driver-collected dead-doc id set (B-side url dups + both
@@ -267,7 +270,8 @@ def _merge_packed_arrow(drops_a_bc, drops_b_bc, max_row_postings=None):
             if int(bounds[-1]) >= 2**31:
                 raise ValueError(
                     f"packed chunk buffer {int(bounds[-1])} bytes overflows "
-                    "int32 Arrow offsets; raise n_tbuckets"
+                    "int32 Arrow offsets; lower "
+                    "spark.sql.execution.arrow.maxRecordsPerBatch"
                 )
             return pa.Array.from_buffers(
                 pa.binary(), og,
@@ -357,6 +361,32 @@ def _live_docs(seg: Segment) -> DataFrame:
     return docs
 
 
+def _merged_packed_rows(
+    live: list[tuple[int, Segment]], n_shards: int, bc_a=None, bc_b=None
+) -> DataFrame:
+    """Both sides' packed posting rows, tagged by side, through ONE
+    shard-slot exchange (segments.shard_slots salted by term) and an
+    in-partition (shard, term) sort into the merge kernel → PACKED_SCHEMA
+    rows, one slot per partition (the write layout)."""
+    parts = [
+        seg.postings.select(
+            "term", "shard",
+            F.lit(side).cast("tinyint").alias("side"),
+            "n", "ids", "tfs", "dls",
+        )
+        for side, seg in live
+    ]
+    src = parts[0]
+    for p in parts[1:]:
+        src = src.unionByName(p)
+    slot, n_slots = shard_slots(src.sparkSession, n_shards, "term")
+    return (
+        src.repartitionById(n_slots, slot)
+        .sortWithinPartitions("shard", "term")
+        .mapInArrow(_merge_packed_arrow(bc_a, bc_b), PACKED_SCHEMA)
+    )
+
+
 def _merge_packed(
     spark: SparkSession,
     seg_a: Segment,
@@ -366,7 +396,6 @@ def _merge_packed(
     docs: DataFrame,
     dest_dir: str,
     n_shards: int,
-    n_tbuckets: int,
 ) -> bool:
     """Packed-row merge fast path (guide §8: every shuffle but the last
     moves a lightweight proxy — here even the last one moves compressed
@@ -410,31 +439,13 @@ def _merge_packed(
 
     bc_a, bc_b = bc_sorted(drops[0]), bc_sorted(drops[1])
     try:
-        parts = [
-            seg.postings.select(
-                "term", "shard",
-                F.lit(side).cast("tinyint").alias("side"),
-                "n", "ids", "tfs", "dls",
-            )
-            for side, seg in live
-        ]
-        src = parts[0]
-        for p in parts[1:]:
-            src = src.unionByName(p)
-        npart = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        tbucket = F.pmod(F.xxhash64("term"), F.lit(n_tbuckets))
-        merged = (
-            src.repartition(npart, F.col("shard"), tbucket)
-            .sortWithinPartitions("shard", "term")
-            .mapInArrow(_merge_packed_arrow(bc_a, bc_b), PACKED_SCHEMA)
-        )
         # explicit shard list: zero-doc shards still get a (zeroed)
         # lineage row, so the merged segment's shard-count metadata is
         # exact and merge-of-merge chains (compaction's steady state)
         # keep qualifying for this fast path
         pack_and_write(
-            spark, merged, docs, dest_dir, n_shards, n_tbuckets,
-            write_terms=True, packed_input=True,
+            spark, _merged_packed_rows(live, n_shards, bc_a, bc_b), docs,
+            dest_dir, n_shards, write_terms=True, packed_input=True,
             shards=list(range(n_shards)),
         )
     finally:
@@ -450,7 +461,6 @@ def merge_segments(
     seg_b: Segment,
     dest_dir: str,
     n_shards: int = 16,
-    n_tbuckets: int = 64,
 ) -> Segment:
     """Merge two segments into dest_dir; side A wins duplicate urls
     (reference merge/common_urls.rs:57-106 keeps the first side's doc)."""
@@ -463,11 +473,15 @@ def merge_segments(
     keep_cols = ["doc_id", "url", "doc_len"]
     if "warc_ts" in docs_a.columns and "warc_ts" in docs_b.columns:
         keep_cols.append("warc_ts")
+    # placed like the packed rows (one shard slot per partition, salted
+    # by doc_id), so the docs write adds no exchange of its own
     docs = (
         docs_a.select(*keep_cols)
         .unionByName(docs_b.select(*keep_cols))
         .withColumn("shard", shard_of_doc_id(n_shards))
     )
+    slot, n_slots = shard_slots(spark, n_shards, "doc_id")
+    docs = docs.repartitionById(n_slots, slot)
 
     if seg_a.num_docs <= 0 and seg_b.num_docs <= 0:
         raise ValueError("refusing to merge two empty segments (index.rs:54-71)")
@@ -475,8 +489,7 @@ def merge_segments(
     # packed-row fast path: shuffle compressed posting rows, not decoded
     # flat rows; falls back below on re-shard or oversized drop sets
     if _merge_packed(
-        spark, seg_a, seg_b, docs_a, docs_b_all, docs, dest_dir,
-        n_shards, n_tbuckets,
+        spark, seg_a, seg_b, docs_a, docs_b_all, docs, dest_dir, n_shards
     ):
         return read_segment(spark, dest_dir)
 
@@ -512,7 +525,7 @@ def merge_segments(
     # Explicit shard list for the same reason as the packed path: exact
     # shard-count metadata on the merged segment.
     pack_and_write(
-        spark, flat, docs, dest_dir, n_shards, n_tbuckets, write_terms=True,
+        spark, flat, docs, dest_dir, n_shards, write_terms=True,
         shards=list(range(n_shards)),
     )
     return read_segment(spark, dest_dir)

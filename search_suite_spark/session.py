@@ -45,10 +45,14 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    # 2 tasks per core: waves overlap the JVM feed phase of one task with
-    # the Python process phase of another in mapInArrow stages (measured
-    # ~30% faster than 1 task/core on the index build); AQE coalesces
-    # small shuffles back down, so queries don't over-partition
+    # shuffle.partitions sizes the JVM shuffle stages only (AQE coalesces
+    # small shuffles back down, so queries don't over-partition). The
+    # write path's Python kernels ignore it and run one task per shard
+    # slot (segments.shard_slots): every Python task pays a fixed
+    # start-up cost whatever its row count — ~0.2-0.3 core·s per
+    # mapInArrow task on a 4-core host under Python 3.11, 95% of it in
+    # PySpark's per-task importlib.invalidate_caches(), which re-reads
+    # pyspark.zip's central directory once per zip importer
     shuffle_partitions = shuffle_partitions or max(2 * cores, 16)
     # shuffle/spill on tmpfs when available: this sandbox's /tmp sits on a
     # slow virtio disk whose concurrent-writer contention dominates wall

@@ -128,7 +128,7 @@ def index_into_collection(
     if segment_name is not None:
         _write_batch_marker(col_dir, name)
     if compact:
-        compact_collection(spark, col_dir, n_shards=n_shards)
+        return compact_collection(spark, col_dir, n_shards=n_shards)
     return load_collection(spark, col_dir)
 
 

@@ -16,7 +16,15 @@ pruning the Iceberg bucket transform would).
 The interface is deliberately storage-shaped, not DataFrame-shaped: the
 physical layout decisions (partition columns, in-file sort, atomic
 dictionary replacement) are part of the storage strategy, so they live
-in the impl — callers hand over logical frames.
+in the impl. Placement is not: write_postings / write_docs take frames
+the caller already placed one shard slot per partition
+(segments.shard_slots, decided once upstream of the Python kernels), so
+a write adds no exchange and leaves at most one file per slot.
+
+Segment metadata costs no Spark job: lineage rows are written from the
+driver with pyarrow, and docs/terms/deletes reads pass an explicit
+schema taken from one parquet footer (Spark's own schema inference
+submits a job per read).
 """
 
 from __future__ import annotations
@@ -45,21 +53,20 @@ class SegmentIO:
     implement DYNAMIC partition-overwrite semantics on shard: only the
     shards present in the written frame are replaced (the resume
     contract — build_segment re-runs batches of shards idempotently).
+    They write the frame's partitions as they are (the caller placed
+    them), each file sorted by term / doc_id.
     """
 
-    def write_postings(
-        self, df: DataFrame, seg_dir: str, mode: str,
-        n_shards: int | None = None,
-    ) -> None:
+    def write_postings(self, df: DataFrame, seg_dir: str, mode: str) -> None:
         raise NotImplementedError
 
-    def write_docs(
-        self, df: DataFrame, seg_dir: str, mode: str,
-        n_shards: int | None = None,
-    ) -> None:
+    def write_docs(self, df: DataFrame, seg_dir: str, mode: str) -> None:
         raise NotImplementedError
 
-    def append_lineage(self, df: DataFrame, seg_dir: str) -> None:
+    def append_lineage(self, rows: list[tuple], seg_dir: str) -> None:
+        """Append driver-held lineage rows (segments.LINEAGE_SCHEMA
+        order and types) — no Spark job. Readers never see a partly
+        written file."""
         raise NotImplementedError
 
     def write_terms(self, df: DataFrame, seg_dir: str) -> None:
@@ -114,70 +121,113 @@ class SegmentIO:
         return None
 
 
-def _shard_write_partitioned(df, salt_col, n_shards):
-    """Partitioning for a shard-layout write: one write task per shard
-    when shards saturate the cluster (the file-per-shard layout queries
-    like — listing/footer cost is per file), but when a segment has
-    FEWER shards than cores (2-shard skew tiers, small collections) a
-    plain repartition("shard") collapses the write into n_shards
-    single-threaded tasks — a serial tail that measured 2.4x slower
-    than the salted form at 600k docs / 2 shards. Salting by
-    pmod(xxhash64(salt_col), k), k = cores/n_shards, restores write
-    parallelism and bounds files per shard at k (the in-file sort and
-    row-group min/max pruning are unaffected — each file stays sorted).
-    k = 1 (shards >= cores, or no hint) reproduces the exact old layout.
-    """
-    from pyspark.sql import functions as F
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+_ARROW_TYPES = {"int": "int32", "long": "int64"}
 
-    par = df.sparkSession.sparkContext.defaultParallelism
-    k = 1 if not n_shards else max(1, par // n_shards)
-    if k == 1:
-        return df.repartition("shard")
-    # 2x partitions over the (shard, salt) key count: hash collisions
-    # on a 1:1 mapping would leave ~1/3 of write slots idle (§2.5 of the
-    # optimization playbook); empty partitions cost nothing
-    return df.repartition(
-        n_shards * k * 2, F.col("shard"),
-        F.pmod(F.xxhash64(F.col(salt_col)), F.lit(k)),
+
+def _parquet_files(table_dir: str):
+    """Data files under ``table_dir`` in walk order, skipping the names
+    Spark's own listing skips: hidden ones, and _-prefixed ones that are
+    not partition dirs."""
+    for root, dirs, files in os.walk(table_dir):
+        dirs[:] = sorted(
+            d for d in dirs
+            if not d.startswith(".") and (not d.startswith("_") or "=" in d)
+        )
+        for f in sorted(files):
+            if f.endswith(".parquet") and not f.startswith((".", "_")):
+                yield os.path.join(root, f)
+
+
+def _footer_schema(table_dir: str):
+    """The Spark schema of a Spark-written parquet table, read from ONE
+    file footer on the driver: the schema Spark stored in the footer
+    (what its own inference returns — it too reads a single footer
+    unless mergeSchema is on) plus any ``name=value`` partition columns
+    on the path below ``table_dir`` (the engine partitions by shard
+    only, so they are ints). Spark's inference would submit a job per
+    read. None when no file carries Spark's schema; callers then fall
+    back to inference."""
+    import json
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    for path in _parquet_files(table_dir):
+        meta = pq.read_schema(path).metadata or {}
+        if _SPARK_ROW_METADATA not in meta:
+            return None
+        schema = StructType.fromJson(json.loads(meta[_SPARK_ROW_METADATA]))
+        rel = os.path.relpath(os.path.dirname(path), table_dir)
+        for part in rel.split(os.sep):
+            if "=" in part:
+                schema.add(StructField(part.split("=", 1)[0], IntegerType()))
+        return schema
+    return None
+
+
+def _read_parquet(spark: SparkSession, table_dir: str, paths=None) -> DataFrame:
+    """spark.read.parquet of ``paths`` (default: the table dir) with the
+    schema of _footer_schema(table_dir) when there is one."""
+    schema = _footer_schema(table_dir)
+    reader = spark.read.schema(schema) if schema is not None else spark.read
+    return reader.parquet(*(paths or [table_dir]))
+
+
+def _write_lineage_file(rows: list[tuple], table_dir: str) -> None:
+    """Write ``rows`` as one parquet file under ``table_dir`` with
+    pyarrow: to a hidden temporary name first, then renamed into place,
+    so no reader (Spark or pyarrow) ever lists a partial file."""
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from search_suite_spark.sources.segments import LINEAGE_SCHEMA
+
+    fields = [f.split(" ") for f in LINEAGE_SCHEMA.split(", ")]
+    schema = pa.schema([(n, _ARROW_TYPES[t]) for n, t in fields])
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=schema
     )
+    os.makedirs(table_dir, exist_ok=True)
+    name = f"part-{uuid.uuid4()}-c000.snappy.parquet"
+    tmp = os.path.join(table_dir, f".{name}.tmp")
+    pq.write_table(table, tmp, compression="snappy")
+    os.rename(tmp, os.path.join(table_dir, name))
 
 
 class ParquetSegmentIO(SegmentIO):
     """Plain-parquet segment store (the sandbox default).
 
     Physical layout mirrors ICEBERG_LAYOUT's intent: postings/docs are
-    hive-partitioned by shard with one file per shard (query latency is
-    dominated by file listing/footers when each (task, shard) pair
-    leaves a fragment) and term/doc_id-sorted within files so row-group
-    min/max statistics prune scans.
+    hive-partitioned by shard with one file per shard slot (query
+    latency is dominated by file listing/footers when each (task, shard)
+    pair leaves a fragment) and term/doc_id-sorted within files so
+    row-group min/max statistics prune scans. The sort leads with the
+    partition column: a partitioned write requires its input sorted by
+    it and would otherwise put its own Sort[shard] in place of the
+    term/doc_id one.
     """
 
-    def write_postings(
-        self, df: DataFrame, seg_dir: str, mode: str,
-        n_shards: int | None = None,
-    ) -> None:
+    def write_postings(self, df: DataFrame, seg_dir: str, mode: str) -> None:
         (
-            _shard_write_partitioned(df, "term", n_shards)
-            .sortWithinPartitions("term")
+            df.sortWithinPartitions("shard", "term")
             .write.mode(mode)
             .partitionBy("shard")
             .parquet(os.path.join(seg_dir, "postings"))
         )
 
-    def write_docs(
-        self, df: DataFrame, seg_dir: str, mode: str,
-        n_shards: int | None = None,
-    ) -> None:
+    def write_docs(self, df: DataFrame, seg_dir: str, mode: str) -> None:
         (
-            _shard_write_partitioned(df, "doc_id", n_shards)
-            .sortWithinPartitions("doc_id")
+            df.sortWithinPartitions("shard", "doc_id")
             .write.mode(mode)
             .partitionBy("shard")
             .parquet(os.path.join(seg_dir, "docs"))
         )
 
-    def append_lineage(self, df: DataFrame, seg_dir: str) -> None:
-        df.write.mode("append").parquet(os.path.join(seg_dir, "lineage"))
+    def append_lineage(self, rows: list[tuple], seg_dir: str) -> None:
+        _write_lineage_file(rows, os.path.join(seg_dir, "lineage"))
 
     def write_terms(self, df: DataFrame, seg_dir: str) -> None:
         # parallel write, (tlen, term)-sorted within files so row-group
@@ -211,21 +261,21 @@ class ParquetSegmentIO(SegmentIO):
         )
 
     def read_docs(self, spark: SparkSession, seg_dir: str) -> DataFrame:
-        return spark.read.parquet(os.path.join(seg_dir, "docs"))
+        return _read_parquet(spark, os.path.join(seg_dir, "docs"))
 
     def read_lineage(self, spark: SparkSession, seg_dir: str) -> DataFrame:
         return spark.read.parquet(os.path.join(seg_dir, "lineage"))
 
     def read_terms(self, spark: SparkSession, seg_dir: str) -> DataFrame | None:
         path = os.path.join(seg_dir, "terms")
-        return spark.read.parquet(path) if os.path.isdir(path) else None
+        return _read_parquet(spark, path) if os.path.isdir(path) else None
 
     def read_deletes(self, spark: SparkSession, seg_dir: str) -> DataFrame | None:
         path = os.path.join(seg_dir, "deletes")
         if not os.path.isdir(path):
             return None
         try:
-            return spark.read.parquet(path)
+            return _read_parquet(spark, path)
         except Exception:
             return None
 
@@ -250,17 +300,11 @@ def _lineage_shards_of_dirs(dirs: list[str]) -> set[int]:
 
     shards: set[int] = set()
     for d in dirs:
-        if not os.path.isdir(d):
-            continue
-        for root, _, files in os.walk(d):
-            for f in files:
-                if not f.endswith(".parquet"):
-                    continue
-                t = pq.read_table(os.path.join(root, f), columns=["shard"])
-                shards.update(
-                    int(s) for s in t.column("shard").to_pylist()
-                    if s is not None
-                )
+        for path in _parquet_files(d):
+            t = pq.read_table(path, columns=["shard"])
+            shards.update(
+                int(s) for s in t.column("shard").to_pylist() if s is not None
+            )
     return shards
 
 
@@ -268,30 +312,21 @@ def _lineage_summary_of_dirs(dirs: list[str]) -> tuple[int, int, int]:
     """Driver-side (Σ n_docs, Σ total_doc_len, max shard) over the
     lineage parquet files under ``dirs`` — pyarrow column reads, no
     Spark job. Missing dirs/files behave like an empty table."""
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     nd = tdl = 0
     max_shard = -1
     for d in dirs:
-        if not os.path.isdir(d):
-            continue
-        for root, _, files in os.walk(d):
-            for f in files:
-                if not f.endswith(".parquet"):
-                    continue
-                t = pq.read_table(
-                    os.path.join(root, f),
-                    columns=["shard", "n_docs", "total_doc_len"],
-                )
-                if t.num_rows == 0:
-                    continue
-                import pyarrow.compute as pc
-
-                nd += pc.sum(t.column("n_docs")).as_py() or 0
-                tdl += pc.sum(t.column("total_doc_len")).as_py() or 0
-                mx = pc.max(t.column("shard")).as_py()
-                if mx is not None and mx > max_shard:
-                    max_shard = mx
+        for path in _parquet_files(d):
+            t = pq.read_table(path, columns=["shard", "n_docs", "total_doc_len"])
+            if t.num_rows == 0:
+                continue
+            nd += pc.sum(t.column("n_docs")).as_py() or 0
+            tdl += pc.sum(t.column("total_doc_len")).as_py() or 0
+            mx = pc.max(t.column("shard")).as_py()
+            if mx is not None and mx > max_shard:
+                max_shard = mx
     return nd, tdl, max_shard
 
 
@@ -302,14 +337,7 @@ def _footer_row_count(table_dir: str) -> int:
     upper bound."""
     import pyarrow.parquet as pq
 
-    if not os.path.isdir(table_dir):
-        return 0
-    n = 0
-    for root, _, files in os.walk(table_dir):
-        for f in files:
-            if f.endswith(".parquet"):
-                n += pq.read_metadata(os.path.join(root, f)).num_rows
-    return n
+    return sum(pq.read_metadata(p).num_rows for p in _parquet_files(table_dir))
 
 
 class ManifestSegmentIO(SegmentIO):
@@ -409,19 +437,17 @@ class ManifestSegmentIO(SegmentIO):
         return [os.path.join(seg_dir, table, r) for r in rels]
 
     def _write_sharded(
-        self, df: DataFrame, seg_dir: str, table: str, mode: str,
-        n_shards: int | None = None,
+        self, df: DataFrame, seg_dir: str, table: str, mode: str
     ) -> None:
         from pyspark.sql import functions as F
 
         sort_col = self._SHARDED[table]
         commit = self._next_commit(seg_dir, table)
         abs_commit = os.path.join(seg_dir, table, commit)
+        # the partition column leads the sort (see ParquetSegmentIO)
         (
-            _shard_write_partitioned(
-                df.withColumn("_p_shard", F.col("shard")), sort_col, n_shards
-            )
-            .sortWithinPartitions(sort_col)
+            df.withColumn("_p_shard", F.col("shard"))
+            .sortWithinPartitions("_p_shard", sort_col)
             .write.mode("overwrite")
             .partitionBy("_p_shard")
             .parquet(abs_commit)
@@ -443,14 +469,17 @@ class ManifestSegmentIO(SegmentIO):
                 shards[shard] = dirs
         self._store(seg_dir, table, mf)
 
+    def _record_commit(self, seg_dir: str, table: str, commit: str) -> None:
+        mf = self._load(seg_dir, table)
+        mf.setdefault("commits", []).append(commit)
+        self._store(seg_dir, table, mf)
+
     def _append_commit(self, df: DataFrame, seg_dir: str, table: str) -> None:
         commit = self._next_commit(seg_dir, table)
         df.write.mode("overwrite").parquet(
             os.path.join(seg_dir, table, commit)
         )
-        mf = self._load(seg_dir, table)
-        mf.setdefault("commits", []).append(commit)
-        self._store(seg_dir, table, mf)
+        self._record_commit(seg_dir, table, commit)
 
     def _read(self, spark, seg_dir, table, schema=None, empty_schema=None):
         paths = self._live_paths(seg_dir, table)
@@ -460,23 +489,20 @@ class ManifestSegmentIO(SegmentIO):
             raise FileNotFoundError(
                 f"no manifest for table {table!r} under {seg_dir}"
             )
-        reader = spark.read.schema(schema) if schema else spark.read
-        return reader.parquet(*paths)
+        if schema is not None:
+            return spark.read.schema(schema).parquet(*paths)
+        return _read_parquet(spark, paths[0], paths)
 
-    def write_postings(
-        self, df: DataFrame, seg_dir: str, mode: str,
-        n_shards: int | None = None,
-    ) -> None:
-        self._write_sharded(df, seg_dir, "postings", mode, n_shards)
+    def write_postings(self, df: DataFrame, seg_dir: str, mode: str) -> None:
+        self._write_sharded(df, seg_dir, "postings", mode)
 
-    def write_docs(
-        self, df: DataFrame, seg_dir: str, mode: str,
-        n_shards: int | None = None,
-    ) -> None:
-        self._write_sharded(df, seg_dir, "docs", mode, n_shards)
+    def write_docs(self, df: DataFrame, seg_dir: str, mode: str) -> None:
+        self._write_sharded(df, seg_dir, "docs", mode)
 
-    def append_lineage(self, df: DataFrame, seg_dir: str) -> None:
-        self._append_commit(df, seg_dir, "lineage")
+    def append_lineage(self, rows: list[tuple], seg_dir: str) -> None:
+        commit = self._next_commit(seg_dir, "lineage")
+        _write_lineage_file(rows, os.path.join(seg_dir, "lineage", commit))
+        self._record_commit(seg_dir, "lineage", commit)
 
     def write_terms(self, df: DataFrame, seg_dir: str) -> None:
         # replace = write new dirs, point the manifest at ONLY them
@@ -515,24 +541,21 @@ class ManifestSegmentIO(SegmentIO):
             return None
         if not paths:
             return None
-        return spark.read.parquet(*paths)
+        return _read_parquet(spark, paths[0], paths)
 
     def read_deletes(self, spark: SparkSession, seg_dir: str) -> DataFrame | None:
         paths = self._live_paths(seg_dir, "deletes")
         if not paths:
             return None
         try:
-            return spark.read.parquet(*paths)
+            return _read_parquet(spark, paths[0], paths)
         except Exception:
             return None
 
     def deletes_count(self, spark: SparkSession, seg_dir: str) -> int | None:
-        import pyarrow.parquet as pq
-
-        n = 0
-        for p in self._live_paths(seg_dir, "deletes"):
-            n += _footer_row_count(p) if os.path.isdir(p) else 0
-        return n
+        return sum(
+            _footer_row_count(p) for p in self._live_paths(seg_dir, "deletes")
+        )
 
     def lineage_summary(
         self, spark: SparkSession, seg_dir: str

@@ -26,6 +26,14 @@ partition overwrite (idempotent re-run) and appends lineage rows only
 after the write succeeds. A restarted build skips shards already in
 lineage — no recomputation (north_rule).
 
+Placement is decided once, upstream of every Python kernel and write:
+shard_slots splits each shard into k = max(1, defaultParallelism //
+n_shards) slots and a repartitionById exchange puts slot
+shard·k + pmod(xxhash64(salt), k) in its own partition. The pack and
+merge kernels run one task per slot, and the frames they emit are
+already in write layout — SegmentIO.write_postings / write_docs only
+sort within partitions, so each shard gets at most k files.
+
 Parquet layout notes for 100 TB scale: postings are partitioned by shard
 and sorted by term within files, so Parquet row-group min/max statistics
 prune term lookups; on a real cluster you would additionally bucket by
@@ -232,12 +240,13 @@ def _pack_stream_arrow(
         def binary_arr(buf: bytes, bounds: np.ndarray) -> pa.Array:
             # pa.binary() offsets are int32 — fail loudly instead of
             # silently wrapping if a chunk's varbyte buffer ever crosses
-            # 2 GiB (the tbucket shuffle salt keeps real chunks orders of
-            # magnitude below this)
+            # 2 GiB (a chunk is one Arrow batch plus at most one carried
+            # posting list, orders of magnitude below this)
             if int(bounds[-1]) >= 2**31:
                 raise ValueError(
                     f"packed chunk buffer {int(bounds[-1])} bytes overflows "
-                    "int32 Arrow offsets; raise n_tbuckets"
+                    "int32 Arrow offsets; lower "
+                    "spark.sql.execution.arrow.maxRecordsPerBatch"
                 )
             return pa.Array.from_buffers(
                 pa.binary(), g,
@@ -394,13 +403,92 @@ def shard_of_doc_id(n_shards: int):
     return F.pmod(F.col("doc_id"), F.lit(n_shards)).cast("int")
 
 
+def shard_slots(
+    spark: SparkSession, n_shards: int, salt_col: str
+) -> tuple[Column, int]:
+    """Write-path placement of rows from ``n_shards`` shards → (slot
+    column, slot count) for ``repartitionById(count, slot)``.
+
+    A slot is one (shard, salt) pair: each shard splits k = max(1,
+    defaultParallelism // n_shards) ways by pmod(xxhash64(salt_col), k),
+    and slot shard·k + salt owns its own partition. k > 1 only when
+    there are fewer shards than cores, so a small segment still fills
+    the cluster. The count sizes every Python kernel stage of the write
+    path (one task per slot: each Python task pays a fixed start-up
+    cost, whatever its row count — an empty one too), and the frames
+    those stages emit are already in write layout, at most k files per
+    shard. Partition ids wrap modulo the count, so a build batch of n
+    consecutive shard ids also gets one partition per slot; a batch with
+    gaps may share a partition between two shards, which the kernels
+    and writes allow (they group by shard). The exchange is
+    REPARTITION_BY_NUM, which AQE never coalesces. k keys off
+    defaultParallelism, which goes stale under dynamic allocation (at
+    worst fewer tasks than cores)."""
+    k = max(1, spark.sparkContext.defaultParallelism // n_shards)
+    slot = F.col("shard") * k + F.pmod(F.xxhash64(salt_col), F.lit(k))
+    return slot.cast("int"), n_shards * k
+
+
+def _pack(
+    flat: DataFrame,
+    n_shards: int,
+    n_placed: int,
+    max_row_postings: int | None = None,
+) -> DataFrame:
+    """The pack stage → a PACK_STREAM_SCHEMA frame, one shard slot per
+    partition: ONE slot exchange (shard_slots over the ``n_placed``
+    shards ``flat`` holds), an in-partition (shard, term, uint64 doc_id)
+    sort and the pack kernel.
+
+    ``flat`` is either the build's raw marker-carrying token instances
+    (doc_id, doc_len, term, shard) or the merge fallback's pre-counted
+    posting rows (term, shard, doc_id, tf, doc_len). For the build, tf is
+    counted by a hash aggregation planned ABOVE the exchange: the slot is
+    one of its grouping keys, so the partition-id passthrough already
+    satisfies its required distribution and Catalyst runs BOTH partial
+    and final HashAggregate after the shuffle (no second exchange, but
+    the exchange itself still carries raw token rows). The collapse to
+    (doc, term, tf) therefore pays off in what runs AFTER the shuffle:
+    the in-partition sort and the Arrow transfer into the pack kernel
+    see ~tf-fold fewer rows. (Aggregating before the exchange would
+    collapse pre-shuffle but needs a second full-key exchange — 2×
+    collapsed bytes vs 1× raw bytes, a wash at web-text tf ratios.) The
+    doc-marker rows ride along (count 1) and, salted by their
+    url-carrying term value, spread over their shard's slots.
+
+    The shard column is projected away before the Arrow boundary (the
+    kernel re-derives it from doc_id), keeping per-row serialization to
+    the columns the kernel needs.
+    """
+    build = "tf" not in flat.columns
+    slot, n_slots = shard_slots(flat.sparkSession, n_placed, "term")
+    if build:
+        pre = (
+            flat.withColumn("slot", slot)
+            .repartitionById(n_slots, "slot")
+            .groupBy("slot", "shard", "doc_id", "doc_len", "term")
+            .agg(F.count("*").cast("int").alias("tf"))
+        )
+    else:
+        pre = flat.repartitionById(n_slots, slot)
+    kernel = _pack_stream_arrow(
+        has_tf=True, n_shards=n_shards,
+        max_row_postings=max_row_postings, emit_docs=build,
+    )
+    u64sort = F.col("doc_id").bitwiseXOR(F.lit(_U64_SIGN_FLIP))
+    return (
+        pre.sortWithinPartitions("shard", "term", u64sort)
+        .select("doc_id", "doc_len", "term", "tf")
+        .mapInArrow(kernel, PACK_STREAM_SCHEMA)
+    )
+
+
 def pack_and_write(
     spark: SparkSession,
     flat: DataFrame,
     docs: DataFrame | None,
     seg_dir: str,
     n_shards: int,
-    n_tbuckets: int = 64,
     shards: list[int] | None = None,
     mode: str = "overwrite",
     write_terms: bool = False,
@@ -413,13 +501,11 @@ def pack_and_write(
     and append per-shard lineage.
 
     ``flat`` is either pre-counted posting rows (term, shard, doc_id, tf,
-    doc_len) — the merge path, with ``docs`` supplied separately — or raw
-    marker-carrying token instances (doc_id, doc_len, term, shard) from
-    token_rows_with_doc, in which case ``docs=None``: tf is counted by a
-    post-shuffle hash aggregation that collapses token instances before
-    the sort and the Arrow boundary (the build's one exchange itself
-    carries raw token rows — see the plan note at the groupBy below),
-    the docs table's (doc_id, doc_len, shard)
+    doc_len) — the merge path, with ``docs`` supplied separately, already
+    placed by shard_slots salted by doc_id — or raw marker-carrying token
+    instances (doc_id, doc_len, term, shard) from token_rows_with_doc, in
+    which case ``docs=None``: tf is counted after the one exchange (see
+    _pack), and the docs table's (doc_id, doc_len, shard)
     rows are emitted from the SAME stream via the null-term marker rows,
     which also carry doc identity (url, warc_us) — one tokenize, one
     shuffle, zero follow-up scans or joins for the whole build (a second
@@ -427,75 +513,24 @@ def pack_and_write(
     ``shards`` restricts the lineage computation to a batch (resume
     granularity). ``io`` is the storage seam (segment_io.SegmentIO) —
     every persisted byte goes through it. ``packed_input`` means ``flat``
-    already IS the packed postings frame (PACKED_SCHEMA — the packed
-    merge path runs its own shuffle+kernel): skip the pre/kernel stage
-    and go straight to the write phase.
+    already IS the packed postings frame (PACKED_SCHEMA, placed one slot
+    per partition — the packed merge path runs its own shuffle+kernel):
+    skip the pack stage and go straight to the write phase.
     """
     io = io or current_io()
     t0 = time.monotonic()
 
-    has_tf = "tf" in flat.columns
-    npart = int(spark.conf.get("spark.sql.shuffle.partitions"))
     single_pass = docs is None
     # persist the packed frame: it is the *compressed* index (orders of
     # magnitude smaller than the flat postings) and every downstream
     # table — postings, docs (single-pass), lineage metrics, terms — is a
     # cheap scan of it; nothing recomputes the expensive pack shuffle.
-    # Shuffle keyed on (shard, tbucket): bounds per-task skew the same
-    # way a salted two-phase agg would (largest key group =
-    # postings_in_shard / n_tbuckets). The shard column is projected away
-    # before the Arrow boundary (the kernel re-derives it from doc_id),
-    # keeping per-row serialization to the columns the kernel needs.
-    u64sort = F.col("doc_id").bitwiseXOR(F.lit(_U64_SIGN_FLIP))
-    if packed_input:
-        packed = flat.persist()
-    elif single_pass:
-        # build path: tf is counted by a hash aggregation planned ABOVE
-        # the explicit repartition — its required distribution is already
-        # satisfied by the one exchange, so Catalyst runs BOTH partial
-        # and final HashAggregate after the shuffle (no second exchange,
-        # but the exchange itself still carries raw token rows). The
-        # collapse to (doc, term, tf) therefore pays off in what runs
-        # AFTER the shuffle: the in-partition sort and the Arrow
-        # transfer into the pack kernel see ~tf-fold fewer rows.
-        # (Aggregating before repartitioning would collapse pre-exchange
-        # but needs a second full-key exchange — 2× collapsed bytes vs
-        # 1× raw bytes, a wash at web-text tf ratios, and it would break
-        # the single-wide-stage shape the scaling profile relies on.)
-        # The null-term doc-marker rows ride along (count 1).
-        kernel = _pack_stream_arrow(
-            has_tf=True, n_shards=n_shards,
-            max_row_postings=max_row_postings, emit_docs=True,
-        )
-        tbucket = F.pmod(F.xxhash64("term"), F.lit(n_tbuckets)).cast("int")
-        pre = (
-            flat.withColumn("tbucket", tbucket)
-            .repartition(npart, F.col("shard"), F.col("tbucket"))
-            .groupBy("shard", "tbucket", "doc_id", "doc_len", "term")
-            .agg(F.count("*").cast("int").alias("tf"))
-            .sortWithinPartitions("shard", "term", u64sort)
-            .select("doc_id", "doc_len", "term", "tf")
-        )
-    else:
-        # merge path: tf arrives pre-counted from the unpacked segments;
-        # tbucket stays a pure partitioning expression (never a column)
-        kernel = _pack_stream_arrow(
-            has_tf=has_tf, n_shards=n_shards,
-            max_row_postings=max_row_postings, emit_docs=False,
-        )
-        tbucket = F.pmod(F.xxhash64("term"), F.lit(n_tbuckets))
-        arrow_cols = (
-            ["term", "doc_id", "tf", "doc_len"]
-            if has_tf
-            else ["doc_id", "doc_len", "term"]
-        )
-        pre = (
-            flat.repartition(npart, F.col("shard"), tbucket)
-            .sortWithinPartitions("shard", "term", u64sort)
-            .select(*arrow_cols)
-        )
+    # It is one shard slot per partition, so the postings and docs
+    # writes consume it without another exchange.
     if not packed_input:
-        packed = pre.mapInArrow(kernel, PACK_STREAM_SCHEMA).persist()
+        n_placed = n_shards if shards is None else len(shards)
+        flat = _pack(flat, n_shards, n_placed, max_row_postings)
+    packed = flat.persist()
     try:
         is_doc_row = F.col("term").isNull()
         postings_out = packed.filter(~is_doc_row).select(
@@ -584,10 +619,8 @@ def pack_and_write(
 
         with cf.ThreadPoolExecutor(max_workers=4) as ex:
             futs = [
-                ex.submit(
-                    io.write_postings, postings_out, seg_dir, mode, n_shards
-                ),
-                ex.submit(io.write_docs, docs, seg_dir, mode, n_shards),
+                ex.submit(io.write_postings, postings_out, seg_dir, mode),
+                ex.submit(io.write_docs, docs, seg_dir, mode),
             ]
             if write_terms:
                 futs.append(
@@ -612,9 +645,7 @@ def pack_and_write(
             tuple([s] + stats.get(s, [0, 0, 0, 0, 0]) + [ms])
             for s in shard_list
         ]
-        io.append_lineage(
-            spark.createDataFrame(lineage_rows, LINEAGE_SCHEMA), seg_dir
-        )
+        io.append_lineage(lineage_rows, seg_dir)
     finally:
         packed.unpersist()
 
@@ -673,7 +704,6 @@ def build_segment(
     shards_per_batch: int = 8,
     resume: bool = True,
     dedupe: bool = True,
-    n_tbuckets: int = 64,
     io: SegmentIO | None = None,
     max_row_postings: int | None = None,
 ) -> Segment:
@@ -727,12 +757,9 @@ def build_segment(
         flat = token_rows_with_doc(bpages).withColumn(
             "shard", shard_of_doc_id(n_shards)
         )
-        # salted two-phase shape: the shuffle key (shard, tbucket)
-        # bounds both group size (postings/shard/n_tbuckets — stop-word
-        # skew) and group count (per-group pack overhead)
         one_shot = not done and len(batch) == len(todo)
         pack_and_write(
-            spark, flat, None, seg_dir, n_shards, n_tbuckets, shards=batch,
+            spark, flat, None, seg_dir, n_shards, shards=batch,
             write_terms=one_shot, io=io, max_row_postings=max_row_postings,
             with_warc_ts="warc_ts" in pages.columns,
         )

@@ -7,8 +7,9 @@ Guarded invariants (BASELINE.md "plan you'd want at 100x"):
      parquet reader (PushedFilters / row-group pruning) and prunes
      columns — the scan must not read the whole segment;
   2. the single-pass build plan contains exactly ONE shuffle exchange
-     (the (shard, tbucket) repartition) and its tokenize stage runs in
-     whole-stage codegen with NO row-at-a-time Python evaluation;
+     (the shard-slot repartitionById, one kernel task per slot) and its
+     tokenize stage runs in whole-stage codegen with NO row-at-a-time
+     Python evaluation; the packed merge has the same one exchange;
   3. the flat BM25 path broadcasts the tiny per-query dictionary side
      rather than shuffling the postings (no sort-merge join on the
      query hot path).
@@ -45,10 +46,30 @@ def test_packed_scan_pushes_term_filter(spark, tmp_path):
     assert "ReadSchema" in plan
 
 
+def _one_slot_exchange_into_kernel(plan: str, n_slots: int) -> None:
+    """``plan`` has exactly ONE exchange: a partition-id passthrough
+    with n_slots partitions that feeds the MapInArrow kernel (through
+    in-partition operators only)."""
+    # formatted mode prints each node twice (tree + details): count
+    # exchanges in the details section's numbered headers only
+    assert len(re.findall(r"\(\d+\) Exchange\b", plan)) == 1, plan
+    passthrough = re.findall(
+        r"Arguments: shufflepartitionidpassthrough\(.*\), (\d+)\), "
+        r"REPARTITION_BY_NUM",
+        plan,
+    )
+    assert passthrough == [str(n_slots)], plan
+    assert "MapInArrow" in plan, plan
+
+
+def _slots(spark, n_shards: int) -> int:
+    return n_shards * max(1, spark.sparkContext.defaultParallelism // n_shards)
+
+
 def test_build_plan_single_exchange_no_python_tokenize(spark):
     from search_suite_spark.operators.build import token_rows_with_doc
     from search_suite_spark.sources.corpus import pages_from_docs_list
-    from search_suite_spark.sources.segments import shard_of_doc_id
+    from search_suite_spark.sources.segments import _pack, shard_of_doc_id
 
     pages = pages_from_docs_list(
         spark, [(f"http://p{i}", f"alpha beta w{i}") for i in range(20)]
@@ -62,23 +83,34 @@ def test_build_plan_single_exchange_no_python_tokenize(spark):
     plan = _plan(flat)
     assert "BatchEvalPython" not in plan, plan
 
-    # the full single-pass build shape (pack_and_write's exact staging):
-    # exactly one shuffle exchange — tbucket rides as a COLUMN so the
-    # tf hash-aggregate's required distribution is satisfied by the
-    # explicit repartition (both partial and final agg run post-shuffle)
-    staged = (
-        flat.withColumn(
-            "tbucket", F.pmod(F.xxhash64("term"), F.lit(7)).cast("int")
-        )
-        .repartition(4, F.col("shard"), F.col("tbucket"))
-        .groupBy("shard", "tbucket", "doc_id", "doc_len", "term")
-        .agg(F.count("*").cast("int").alias("tf"))
+    # the full single-pass pack stage, staged by the build's own code:
+    # exactly one shuffle exchange — the slot rides as a grouping COLUMN
+    # so the partition-id passthrough satisfies the tf hash-aggregate's
+    # required distribution (both partial and final agg run
+    # post-shuffle) — with one partition per shard slot
+    _one_slot_exchange_into_kernel(
+        _plan(_pack(flat, 2, 2)), _slots(spark, 2)
     )
-    # formatted mode prints each node twice (tree + details): count
-    # exchanges in the details section's numbered headers only
-    plan2 = _plan(staged)
-    n_exchanges = len(re.findall(r"\(\d+\) Exchange\b", plan2))
-    assert n_exchanges == 1, plan2
+
+
+def test_merge_plan_single_slot_exchange(spark, tmp_path):
+    """The packed merge ships both sides' packed rows through ONE
+    shard-slot exchange into the merge kernel — one task per slot."""
+    from search_suite_spark.operators.merge import _merged_packed_rows
+    from search_suite_spark.sources.corpus import pages_from_docs_list
+    from search_suite_spark.sources.segments import build_segment
+
+    segs = [
+        build_segment(
+            pages_from_docs_list(
+                spark, [(f"http://{side}{i}", f"alpha w{i}") for i in range(12)]
+            ),
+            str(tmp_path / side), n_shards=2,
+        )
+        for side in ("a", "b")
+    ]
+    merged = _merged_packed_rows(list(enumerate(segs)), 2)
+    _one_slot_exchange_into_kernel(_plan(merged), _slots(spark, 2))
 
 
 def test_flat_query_broadcasts_dictionary(spark):

@@ -3,7 +3,7 @@
 One term appears in EVERY doc of a 280k-doc corpus, so each of the two
 doc-hash shards holds a ~140k-posting list for it — above
 codec.MAX_ROW_POSTINGS (131072), so the giant-list split fires at its
-real production cap (no artificial tiny caps), the (shard, tbucket)
+real production cap (no artificial tiny caps), the shard-slot
 exchange must stay balanced, and the split-row WAND path must both
 return the analytically-correct result set AND decode only a small
 fraction of tf/dl blocks on a top-k query (transfer ∝ blocks decoded —

@@ -99,30 +99,15 @@ def main() -> None:
         dump("text_scan",
              TA.quality_score(docs).join(TA.lang_id(docs), "url"))
 
-        # build-path plans: the packed frame's input (pre-kernel) and the
-        # flat build's postings
+        # build-path plan: the pack stage (slot exchange + kernel),
+        # staged by the build's own code
         from search_suite_spark.operators.build import (
             dedupe_newest_wins, token_rows_with_doc,
         )
-        from search_suite_spark.sources.segments import (
-            _U64_SIGN_FLIP, shard_of_doc_id,
-        )
-        bp = dedupe_newest_wins(pages)
-        flat = token_rows_with_doc(bp).withColumn(
+        from search_suite_spark.sources.segments import _pack, shard_of_doc_id
+        flat = token_rows_with_doc(dedupe_newest_wins(pages)).withColumn(
             "shard", shard_of_doc_id(8))
-        npart = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        pre = (
-            flat.withColumn("tbucket", F.pmod(
-                F.xxhash64("term"), F.lit(64)).cast("int"))
-            .repartition(npart, F.col("shard"), F.col("tbucket"))
-            .groupBy("shard", "tbucket", "doc_id", "doc_len", "term")
-            .agg(F.count("*").cast("int").alias("tf"))
-            .sortWithinPartitions(
-                "shard", "term",
-                F.col("doc_id").bitwiseXOR(F.lit(_U64_SIGN_FLIP)))
-            .select("doc_id", "doc_len", "term", "tf")
-        )
-        dump("index_build_pre_kernel", pre)
+        dump("index_build_pack", _pack(flat, 8, 8))
 
         from search_suite_spark.operators.merge import unpack_flat
         half_a_dir = tempfile.mkdtemp(prefix="explain_half_a_")
@@ -151,27 +136,13 @@ def main() -> None:
             dump("merge_flat_union", merge_flat)
 
             # the packed-row merge pipeline (the shipped fast path):
-            # compressed rows through the one exchange, decode+drop+
-            # repack in a single kernel — mirrors merge._merge_packed
+            # compressed rows through the one slot exchange, decode+drop+
+            # repack in a single kernel — staged by the merge's own code
             from search_suite_spark.operators.merge import (
-                _merge_packed_arrow,
+                _merged_packed_rows,
             )
-            from search_suite_spark.sources.segments import PACKED_SCHEMA
-            parts = [
-                s.postings.select(
-                    "term", "shard",
-                    F.lit(i).cast("tinyint").alias("side"),
-                    "n", "ids", "tfs", "dls")
-                for i, s in ((0, half_a), (1, half_b))
-            ]
-            merge_packed = (
-                parts[0].unionByName(parts[1])
-                .repartition(npart, F.col("shard"),
-                             F.pmod(F.xxhash64("term"), F.lit(64)))
-                .sortWithinPartitions("shard", "term")
-                .mapInArrow(_merge_packed_arrow(None, None), PACKED_SCHEMA)
-            )
-            dump("merge_packed", merge_packed)
+            dump("merge_packed",
+                 _merged_packed_rows([(0, half_a), (1, half_b)], 8))
 
             from search_suite_spark.sources.registry import (
                 query_collection_partial,
